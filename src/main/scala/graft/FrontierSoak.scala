@@ -2,7 +2,6 @@ package graft
 
 import java.sql.Timestamp
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.streaming.OutputMode
 
@@ -47,12 +46,7 @@ object FrontierSoak {
     val rows = sys.env.getOrElse("SPARK_GRAFT_SOAK_ROWS", "128").toInt
     val sampleEvery = sys.env.getOrElse("SPARK_GRAFT_SOAK_SAMPLE", "100").toInt
     val hosts = 97
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = MasterConfig(SparkSession.builder(), cpus)
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.ui.enabled", "false")
+    val spark = Session.builder()
       .config("spark.sql.streaming.stateStore.providerClass",
         graft.streaming.Frontier.RocksDbProvider)
       // SPARK_GRAFT_SOAK_CHANGELOG=true switches the RocksDB commit mode
@@ -67,7 +61,6 @@ object FrontierSoak {
       .config("spark.sql.streaming.stateStore.rocksdb" +
         ".changelogCheckpointing.enabled", sys.env.getOrElse(
         "SPARK_GRAFT_SOAK_CHANGELOG", "false"))
-      .withExtensions(new graft.functions.GraftExtensions)
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     import spark.implicits._

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.ext.IvfPqIndex
@@ -13,16 +12,8 @@ import graft.ext.IvfPqIndex
   * stored artefacts. Prints one JSON line; recorded in BENCHNOTES. */
 object IndexServeBench {
   def main(args: Array[String]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.ansi.enabled", false)
-      .config("spark.sql.adaptive.enabled", true)
-      .config("spark.ui.enabled", false)
-      .withExtensions(new graft.functions.GraftExtensions)
-      .getOrCreate()
+    val spark = Session.builder().getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
     val all = graft.queries.ExtQueries.plantedEmbeddings(spark, sfDir)

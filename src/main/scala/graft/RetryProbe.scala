@@ -5,7 +5,7 @@ import java.util.concurrent.atomic.AtomicInteger
 
 import org.apache.spark.{Success => TaskSuccess, TaskContext}
 import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
-import org.apache.spark.sql.{DataFrame, Encoders, SparkSession}
+import org.apache.spark.sql.{DataFrame, Encoders}
 
 /** Task-retry determinism probe: proves byte-identical query output when
   * tasks FAIL AND RECOMPUTE — the routine 100-TB events (speculative
@@ -90,7 +90,6 @@ object RetryProbe {
   def main(args: Array[String]): Unit = {
     require(args.nonEmpty, "pass query names")
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
     val killMode = sys.env.contains("SPARK_GRAFT_KILL_EXEC")
     val decomMode = sys.env.contains("SPARK_GRAFT_DECOM")
     require(!killMode || sys.env.get("SPARK_GRAFT_MASTER")
@@ -110,10 +109,9 @@ object RetryProbe {
         "— TaskSchedulerImpl hard-disables speculation in local mode " +
         "(!isLocal gate), so a local run would silently test nothing")
     val speculate = sys.env.contains("SPARK_GRAFT_SPECULATE")
-    val builder0 =
-      if (sys.env.contains("SPARK_GRAFT_MASTER"))
-        MasterConfig(SparkSession.builder(), cpus)
-      else SparkSession.builder().master(s"local[$cpus, 4]")
+    val builder0 = Session.builder(
+      if (sys.env.contains("SPARK_GRAFT_MASTER")) Session.master
+      else s"local[${Session.cpus}, 4]")
     // aggressive speculation so the probe's slow-partition bait reliably
     // draws a clone: speculate once 10% of tasks finish, threshold 1.0x
     // the median (production would never run this hot — the point is to
@@ -153,14 +151,7 @@ object RetryProbe {
       // races the handover window fails transiently and is retried
       // without counting toward stage-abort limits
       .config("spark.stage.ignoreDecommissionFetchFailure", "true")
-    val spark = builder1
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .withExtensions(new graft.functions.GraftExtensions)
-      .getOrCreate()
+    val spark = builder1.getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
 
     // Speculation is UNSCHEDULABLE on a one-host topology:
@@ -221,7 +212,7 @@ object RetryProbe {
     // work, because killing an idle one is absorbed invisibly by the
     // scheduler and proves nothing
     val liveTasks = new java.util.concurrent.ConcurrentHashMap[Long, String]()
-    spark.sparkContext.addSparkListener(new SparkListener {
+    BenchTelemetry.listen(spark, new SparkListener {
       override def onTaskEnd(te: SparkListenerTaskEnd): Unit = {
         if (te.reason != TaskSuccess) taskFailures.incrementAndGet()
         // FetchFailed is the LOST-OUTPUT class: a downstream task could

@@ -5,7 +5,6 @@ import java.sql.Timestamp
 import java.util.concurrent.atomic.{AtomicBoolean, AtomicInteger}
 
 import org.apache.spark.scheduler._
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.streaming.OutputMode
 
@@ -62,15 +61,10 @@ object StreamDecomProbe {
       .exists(_.startsWith("local-cluster")),
       "StreamDecomProbe needs SPARK_GRAFT_MASTER=local-cluster[...] " +
         "(decommission is an executor-process event; local mode has none)")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
     val batches = sys.env.getOrElse("SPARK_GRAFT_STREAM_BATCHES", "36").toInt
     val rows = sys.env.getOrElse("SPARK_GRAFT_STREAM_ROWS", "96").toInt
     val hosts = 97
-    val spark = MasterConfig(SparkSession.builder(), cpus)
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.ui.enabled", "false")
+    val spark = Session.builder()
       .config("spark.sql.streaming.stateStore.providerClass",
         graft.streaming.Frontier.RocksDbProvider)
       .config("spark.decommission.enabled", "true")
@@ -79,7 +73,6 @@ object StreamDecomProbe {
       .config("spark.storage.decommission.rddBlocks.enabled", "true")
       .config("spark.executor.decommission.forceKillTimeout", "120s")
       .config("spark.stage.ignoreDecommissionFetchFailure", "true")
-      .withExtensions(new graft.functions.GraftExtensions)
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     import spark.implicits._
@@ -89,7 +82,7 @@ object StreamDecomProbe {
     val fetchFailures = new AtomicInteger
     val decomRemovals = new AtomicInteger
     val liveTasks = new java.util.concurrent.ConcurrentHashMap[Long, String]()
-    spark.sparkContext.addSparkListener(new SparkListener {
+    BenchTelemetry.listen(spark, new SparkListener {
       override def onTaskStart(ts: SparkListenerTaskStart): Unit =
         liveTasks.put(ts.taskInfo.taskId, ts.taskInfo.executorId)
       override def onTaskEnd(te: SparkListenerTaskEnd): Unit = {

@@ -2,7 +2,6 @@ package graft
 
 import java.sql.Timestamp
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.OutputMode
@@ -29,14 +28,7 @@ object StreamingBench {
       .map(_.numRowsTotal).sum
 
   def main(args: Array[String]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = MasterConfig(SparkSession.builder(), cpus)
-      .appName("graft-streaming-bench")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Session.builder().appName("graft-streaming-bench").getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     implicit val sqlCtx = spark.sqlContext
     import spark.implicits._

@@ -55,7 +55,7 @@ object GraphOps {
     // edge-derivation lineage (scan + window + two aggregates) in the
     // cached plan, and every task of every round stage that scans the
     // cache pays to deserialize that plan inside its task binary —
-    // measured (StageProbe, sf0.1) at ~100 ms CPU per TASK, ~3 CPU-seconds
+    // measured (Bench stages, sf0.1) at ~100 ms CPU per TASK, ~3 CPU-seconds
     // per 32-task round stage on a 100-node graph. The checkpoint stores
     // the same rows but plans as a flat LogicalRDD scan, so round closures
     // stay constant-size however expensive the caller's edge derivation

@@ -189,7 +189,7 @@ object SetSimJoin {
     // the sets table feeds FOUR branches (two candidate sides + two verify
     // joins) and Catalyst does not share subtrees across branches, so the
     // tokenize+frequency-join+aggregate pipeline recomputes per branch.
-    // Deliberately NOT materialized: measured at sf0.1 (BenchSubset, idle
+    // Deliberately NOT materialized: measured at sf0.1 (Bench subset, idle
     // machine), plain recompute is 2x faster than an eager localCheckpoint
     // (3.1 s vs 6.8 s) — caching rows that each carry the full sorted
     // element array costs more than recomputing the map-heavy pipeline,

@@ -47,3 +47,13 @@ object FunctionInstaller {
       spark.sessionState.functionRegistry.registerFunction(id, info, b)
     }
 }
+
+/** Listener-bus bridge: the bus is asynchronous, so stage metrics and
+  * query-execution callbacks land after the action that caused them
+  * returns. `waitUntilEmpty` blocks until every event posted so far has
+  * been delivered — the exact drain measurement needs — but it is
+  * `private[spark]`. Throws TimeoutException if the bus stays busy. */
+object ListenerBusBridge {
+  def waitUntilEmpty(sc: org.apache.spark.SparkContext, timeoutMs: Long): Unit =
+    sc.listenerBus.waitUntilEmpty(timeoutMs)
+}

@@ -371,7 +371,7 @@ object ExtQueries {
     * same (cnt DESC, left, right) argmax, and the merge applied as one
     * non-overlapping delimited replace — an independent implementation
     * agreeing on every learned rank AND its pair count. Collect-eager
-    * (the PlanAudit exclusion class); plan shape locked in BpeSpec. */
+    * (its returned frame is a vacuous plan); plan shape locked in BpeSpec. */
   val xBpeLearn: Q = (s, dir) =>
     TextOps.bpeLearnMerges(docs(s, dir), col("text"), nMerges = 8)
 
@@ -634,7 +634,7 @@ object ExtQueries {
     * different algorithm, so agreement checks the prefix filter's
     * completeness, not a mirror of it. */
   val xSetsimJoin: Q = (s, dir) =>
-    // elems deliberately NOT persisted: measured this round (BenchSubset,
+    // elems deliberately NOT persisted: measured this round (Bench subset,
     // sf0.1), caching the exploded shingle frame makes the query 3x SLOWER
     // (3.7 -> 12.3 s; shuffle records 99.5k -> 542k) — the stats-less
     // InMemoryRelation demotes the prefix-join broadcasts to sort-merge

@@ -1,7 +1,7 @@
 package graft
 
-/** Plan-shape regression locks for the scale-critical properties PlanAudit
-  * reports: pushdown reaching the scan, explicit broadcasts staying
+/** Plan-shape regression locks for the scale-critical properties:
+  * pushdown reaching the scan, explicit broadcasts staying
   * broadcast, map-only batteries staying shuffle-free, and no accidental
   * cartesian/nested-loop blowups. These are the properties that make the
   * queries survive a 100× scale-up; a refactor that silently loses one

@@ -5,30 +5,47 @@ package graft
   * round-9 failure mode, where a testdata re-encoding broke 15 declared
   * queries at analysis time and Verify's per-query try/catch silently shrank
   * the driver's correctness denominator from 133 to 118 — "all green" while
-  * 11% of the surface errored. Analysis itself runs no jobs, so most of the
-  * surface checks in seconds — EXCEPT the stored-index queries
-  * (x_ivfpq_stored/append/serve*), whose query FUNCTIONS eagerly build
-  * their memoized artefacts before returning a frame; for those this spec
-  * also pays one build at sf0.001 (and a build failure surfaces here by
-  * query name, which is still the loud signal we want). Execution
-  * correctness stays with the driver's DuckDB compare and the per-operator
-  * suites.
+  * 11% of the surface errored. Each query is also physically planned, and
+  * its plan checked for the tokenize-once invariant. Neither analysis nor
+  * planning runs jobs, so most of the surface checks in seconds — EXCEPT
+  * the stored-index queries (x_ivfpq_stored/append/serve*), whose query
+  * FUNCTIONS eagerly build their memoized artefacts before returning a
+  * frame; for those this spec also pays one build at sf0.001 (and a build
+  * failure surfaces here by query name, which is still the loud signal we
+  * want). Execution correctness stays with the DuckDB oracle compare and
+  * the per-operator suites.
   */
 class QuerySurfaceSpec extends SparkTestBase {
 
   private val dir = sf("sf0.001")
 
   test("every declared query analyzes against sf0.001") {
+    val chain = "split\\(trim\\(regexp_replace\\(lower\\(".r
+    val retokenized = Seq.newBuilder[String]
     val failures = SparkEntry.queries.toSeq.sortBy(_._1).flatMap {
       case (name, fn) =>
-        try { fn(spark, dir).queryExecution.analyzed; None }
+        try {
+          val qe = fn(spark, dir).queryExecution
+          qe.analyzed
+          // tokenize-once: PushDownPredicates inlines aliases into filter
+          // conditions with no cost guard, so a filter on a derived text
+          // column can silently turn into N tokenizer chains per scanned
+          // row (the x_pipeline 11x case). No operator line may hold more
+          // than one chain.
+          val worst = qe.executedPlan.toString.linesIterator
+            .map(chain.findAllIn(_).size).maxOption.getOrElse(0)
+          if (worst > 1) retokenized += s"$name: $worst chains on one plan line"
+          None
+        }
         catch { case e: Throwable =>
           Some(s"$name: ${Option(e.getMessage).getOrElse(e.getClass.getName).linesIterator.take(3).mkString(" | ")}")
         }
     }
     assert(failures.isEmpty,
-      s"\n${failures.size} declared queries fail analysis:\n" +
+      s"\n${failures.size} declared queries fail analysis or planning:\n" +
         failures.mkString("\n"))
+    assert(retokenized.result().isEmpty,
+      retokenized.result().mkString("\ntokenizer barrier lost:\n", "\n", ""))
     // constructing every query function persists several intermediate
     // frames (and the stored-index builds cache their artefacts) into the
     // SHARED test session — left in place they change later suites' plans

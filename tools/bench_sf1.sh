@@ -33,7 +33,6 @@ export SPARK_GRAFT_BENCH_OUT="BENCH_SF1.json"
 echo "[bench_sf1] running full bench on tmp/sf1 (reps=$SPARK_GRAFT_REPS)..." >&2
 sbt -batch "runMain graft.Bench" > /tmp/bench_sf1.log 2>&1 || {
   tail -20 /tmp/bench_sf1.log >&2; exit 1; }
-grep -o '{"metric".*' /tmp/bench_sf1.log | tail -1 > /dev/null || true
 
 # growth-ratio table vs the committed sf0.1 snapshot
 python3 - <<'PYEOF'
