@@ -51,25 +51,45 @@ object Broadcaster {
       .where(col(plannedCol) === lit(planned))
       .select(cols.map(col): _*)
 
-  /** The full fan-out: cache the input once, then 24 cheap filtered
-    * projections over the cached scan — each result is written as one JSON
-    * document (Op-6). Without the persist every returned frame would re-read
-    * the source when its consumer materialises it (24 full scans at serving
-    * time); with it the scan happens once, on first use. Callers that own a
-    * longer-lived cache of `alerts` pay nothing extra (CacheManager dedups
-    * by plan). Release path: the cache is registered on the `alerts` frame
-    * the caller passed in — call `alerts.unpersist()` after the 24 documents
-    * are written (a per-refresh-cycle caller that never does accumulates one
-    * cache entry per distinct input plan). */
+  /** A driver-local copy of `df`: collecting it is one Spark job, and every
+    * frame built on the copy plans over a `LocalRelation`. Catalyst folds
+    * filters and projections over it into a new `LocalRelation`
+    * (`ConvertToLocalRelation`), so serving and rendering from the copy
+    * ([[graft.io.JsonDocumentSink.renderDocument]]) run no further job. */
+  def snapshot(df: DataFrame): DataFrame =
+    df.sparkSession.createDataFrame(df.collectAsList(), df.schema)
+
+  /** The full fan-out: one [[snapshot]] of the rows and columns the
+    * documents hold, then the requested (window, planned, version)
+    * documents as [[serve]] over it. Building the map is the fan-out's one
+    * job, the snapshot's collect; materialising any returned frame, e.g.
+    * writing it with `JsonDocumentSink`, runs none. Nothing is cached, so
+    * there is nothing to release.
+    *
+    * Driver bound: the snapshot is pre-filtered to `planned ∈ planneds`
+    * and the union of the requested windows, and pre-projected to the
+    * union of the requested version columns plus the expiry and planned
+    * columns. The windows nest and each version's columns contain the
+    * previous one's, so it holds the rows and columns of the widest
+    * window's widest-version documents (the all-window v1.2 pair by
+    * default), plus the two filter columns: what those documents collect
+    * to the driver anyway, never the upstream data. */
   def fanOut(alerts: DataFrame, baseCols: Seq[String], now: Timestamp,
              windows: Seq[TimeWindow] = Seq(All, Last7Days, Current),
              planneds: Seq[Boolean] = Seq(true, false),
              versions: Seq[String] = Seq("v0", "v1", "v1.1", "v1.2"))
   : Map[(TimeWindow, Boolean, String), DataFrame] = {
-    val cached = alerts.persist()
     val combos = for { w <- windows; p <- planneds; v <- versions } yield (w, p, v)
-    combos.map { case (w, p, v) =>
-      (w, p, v) -> serve(cached, w, p, versionColumns(baseCols, v), now)
-    }.toMap
+    if (combos.isEmpty) Map.empty
+    else {
+      val held = snapshot(alerts
+        .where(col("planned").isin(planneds: _*) &&
+          windows.map(windowPredicate(col("expiry_date"), _, now)).reduce(_ || _))
+        .select((versions.flatMap(versionColumns(baseCols, _)) :+ "expiry_date" :+ "planned")
+          .distinct.map(col): _*))
+      combos.map { case (w, p, v) =>
+        (w, p, v) -> serve(held, w, p, versionColumns(baseCols, v), now)
+      }.toMap
+    }
   }
 }

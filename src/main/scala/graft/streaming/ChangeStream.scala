@@ -4,6 +4,8 @@ import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
 
+import graft.serve.Broadcaster
+
 /** The reference's event-driven side re-expressed as Structured Streaming.
   *
   * Reference: `cct_recon/alerts-recon.py` — on each new snapshot, diff
@@ -51,11 +53,18 @@ object ChangeStream {
   }
 
   /** Op-62: per-record versioned fan-out — each API version drops the
-    * columns it predates (alerts-recon.py:50-81). */
-  def versionedFanOut(batch: DataFrame): Map[String, DataFrame] = Map(
-    "v1" -> batch.drop("geospatial_footprint", "area_type", "status"),
-    "v1.1" -> batch.drop("status"),
-    "v1.2" -> batch)
+    * columns it predates (alerts-recon.py:50-81). All three documents are
+    * projections of one [[Broadcaster.snapshot]] of `batch`: building the
+    * map is the fan-out's one Spark job, the snapshot's collect, and
+    * rendering the documents runs none. Driver bound: the snapshot is the
+    * v1.2 document itself, which its writer collects anyway. */
+  def versionedFanOut(batch: DataFrame): Map[String, DataFrame] = {
+    val held = Broadcaster.snapshot(batch)
+    Map(
+      "v1" -> held.drop("geospatial_footprint", "area_type", "status"),
+      "v1.1" -> held.drop("status"),
+      "v1.2" -> held)
+  }
 
   /** Op-63: conditional notify — invoke `notify` with the new ids only when
     * the batch is non-empty (SNS publish analogue). A notification payload
@@ -86,15 +95,14 @@ object ChangeStream {
       .option("checkpointLocation", checkpoint)
       .trigger(Trigger.AvailableNow())
       .foreachBatch { (batch: DataFrame, _: Long) =>
-        val cached = batch.persist()
-        try {
-          // opportunistic skip (Op-14 analogue): AvailableNow emits a trailing
-          // empty batch — writing it would clobber the documents with []
-          if (!cached.isEmpty) {
-            versionedFanOut(cached).foreach { case (v, df) => sink(v, df) }
-            notifyIfAny(cached, "Id")(notify)
-          }
-        } finally { cached.unpersist(); () }
+        val docs = versionedFanOut(batch)
+        val held = docs("v1.2") // the whole batch, driver-local
+        // opportunistic skip (Op-14 analogue): AvailableNow emits a trailing
+        // empty batch — writing it would clobber the documents with []
+        if (!held.isEmpty) {
+          docs.foreach { case (v, df) => sink(v, df) }
+          notifyIfAny(held, "Id")(notify)
+        }
       }
       .start()
   }

@@ -47,7 +47,38 @@ class IoSpec extends SparkTestBase {
     val body = new String(Files.readAllBytes(Paths.get(path)))
     assert(body.startsWith("[") && body.endsWith("]"))
     assert(body.contains("\"id\":1") && body.contains("\"title\":\"a\""))
-    assert(!body.contains("\"title\":null"))  // null fields pruned (toJSON drops)
+    assert(!body.contains("\"title\":null"))  // null fields pruned (spark.sql.jsonGenerator.ignoreNullFields)
+  }
+
+  test("Op-6 JSON document render is byte-identical to toJSON") {
+    import java.sql.{Date, Timestamp}
+    val df = Seq(
+      (1L, Option("a"), 1.5, Option(Timestamp.valueOf("2024-06-15 12:34:56.789")),
+        Option(Date.valueOf("2024-06-15")), Seq(Option("x"), None), Option(("n", Option(2.25)))),
+      (2L, None, -0.1, None, None, Seq.empty[Option[String]], Option(("m", None))),
+      (3L, Option("q\"u\\o\u00e9"), 1e20, Option(Timestamp.valueOf("1999-12-31 23:59:59")),
+        Option(Date.valueOf("1970-01-01")), Seq(Option("")), None))
+      .toDF("id", "title", "score", "ts", "day", "tags", "meta")
+    def viaToJson(d: org.apache.spark.sql.DataFrame) = d.toJSON.collect().mkString("[", ",", "]")
+    assert(JsonDocumentSink.renderDocument(df) == viaToJson(df))
+    // a driver-local frame renders with no job, a file-backed one with one
+    assert(jobsDuring(JsonDocumentSink.renderDocument(df)) == 0)
+    val src = Files.createTempDirectory("graft-render").resolve("t").toString
+    df.coalesce(1).write.parquet(src)
+    val read = spark.read.parquet(src)
+    var doc = ""
+    assert(jobsDuring { doc = JsonDocumentSink.renderDocument(read) } == 1)
+    assert(doc == viaToJson(read))
+  }
+
+  test("Op-6 JSON document overwrite is atomic and leaves no temp file") {
+    val root = Files.createTempDirectory("graft-json2").toString
+    val name = JsonDocumentSink.documentName("v0", "alerts", "all", planned = true)
+    JsonDocumentSink.write(Seq(1L, 2L, 3L).toDF("id"), root, name)
+    val path = JsonDocumentSink.write(Seq(9L).toDF("id"), root, name)
+    assert(new String(Files.readAllBytes(Paths.get(path))) == "[{\"id\":9}]")
+    assert(Paths.get(path).getParent.toFile.listFiles().map(_.getName).toSeq ==
+      Seq("alerts-all-planned.json"))
   }
 
   test("Op-5 legacy stores (no markers) stay readable; markers win once present") {

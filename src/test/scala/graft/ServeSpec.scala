@@ -1,8 +1,11 @@
 package graft
 
+import java.nio.file.Files
 import java.sql.Timestamp
 
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
+import graft.io.JsonDocumentSink
 import graft.serve.Broadcaster
 import graft.serve.Broadcaster.{All, Current, Last7Days}
 
@@ -46,5 +49,36 @@ class ServeSpec extends SparkTestBase {
     out.foreach { case ((_, _, v), df) =>
       assert(df.columns.toSeq == Broadcaster.versionColumns(Seq("id", "title"), v))
     }
+  }
+
+  test("Op-47 fan-out documents equal the per-document rendering of serve") {
+    val base = Seq("id", "title")
+    val out = Broadcaster.fanOut(alerts, base, now)
+    out.foreach { case ((w, p, v), df) =>
+      val old = Broadcaster.serve(alerts, w, p, Broadcaster.versionColumns(base, v), now)
+        .toJSON.collect().mkString("[", ",", "]")
+      assert(JsonDocumentSink.renderDocument(df) == old, s"($w, $p, $v)")
+    }
+  }
+
+  test("Op-47 fan-out: one job for all 24 documents, no cache left behind") {
+    // a file-backed input, like the gold store the Broadcaster reads
+    val src = Files.createTempDirectory("graft-serve").resolve("alerts").toString
+    alerts.write.parquet(src)
+    val input = spark.read.parquet(src)
+    val rddsBefore = spark.sparkContext.getPersistentRDDs.size
+    val root = Files.createTempDirectory("graft-serve-docs").toString
+    val jobs = jobsDuring {
+      Broadcaster.fanOut(input, Seq("id", "title"), now).foreach { case ((w, p, v), df) =>
+        JsonDocumentSink.write(df, root, JsonDocumentSink.documentName(v, "alerts", w.toString, p))
+      }
+    }
+    assert(jobs == 1, s"fan-out + 24 writes started $jobs jobs")
+    val docs = Files.walk(java.nio.file.Paths.get(root))
+    try assert(docs.filter(Files.isRegularFile(_)).count() == 24) finally docs.close()
+    assert(input.storageLevel == StorageLevel.NONE)
+    assert(spark.sharedState.cacheManager
+      .lookupCachedData(input.asInstanceOf[org.apache.spark.sql.classic.Dataset[_]]).isEmpty)
+    assert(spark.sparkContext.getPersistentRDDs.size == rddsBefore)
   }
 }

@@ -1,5 +1,8 @@
 package graft
 
+import java.util.concurrent.atomic.AtomicInteger
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -19,6 +22,21 @@ trait SparkTestBase extends AnyFunSuite {
       case (k, Some(v)) => conf.set(k, v)
       case (k, None)    => conf.unset(k)
     }
+  }
+
+  /** The number of Spark jobs `body` starts. The listener bus is drained
+    * before the listener is added (so earlier work is not counted) and
+    * after `body` (so every job it started is). */
+  def jobsDuring(body: => Unit): Int = {
+    val jobs = new AtomicInteger
+    val l = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = { jobs.incrementAndGet(); () }
+    }
+    BenchTelemetry.drain(spark)
+    spark.sparkContext.addSparkListener(l)
+    try { body; BenchTelemetry.drain(spark) }
+    finally spark.sparkContext.removeSparkListener(l)
+    jobs.get
   }
 }
 

@@ -422,6 +422,28 @@ class StreamingSpec extends SparkTestBase {
     assert(out("v1.2").columns.toSeq == Seq("Id", "status", "area_type", "geospatial_footprint"))
   }
 
+  test("Op-61-63 run: each batch's new pairs reach the 3 documents and the notify") {
+    val root = java.nio.file.Files.createTempDirectory("graft-recon")
+    val input = root.resolve("in").toString
+    Seq((1L, "Open", ts("2024-01-01 00:00:00"), "Suburb", "POINT (0 0)"),
+        (2L, "Open", ts("2024-01-01 00:01:00"), "Ward", null))
+      .toDF("Id", "status", "ts", "area_type", "geospatial_footprint")
+      .write.parquet(input)
+    val docs = scala.collection.mutable.Map.empty[String, String]
+    val notified = scala.collection.mutable.ArrayBuffer.empty[Seq[Long]]
+    val q = ChangeStream.run(spark, input, root.resolve("ckpt").toString, "1 day",
+      (v, df) => docs(v) = graft.io.JsonDocumentSink.renderDocument(df.orderBy("Id")),
+      ids => notified += ids)
+    q.awaitTermination()
+    // the trailing empty batch of AvailableNow leaves the documents alone
+    assert(docs("v1") ==
+      """[{"Id":1,"ts":"2024-01-01T00:00:00.000Z"},{"Id":2,"ts":"2024-01-01T00:01:00.000Z"}]""")
+    assert(docs("v1.1") == """[{"Id":1,"ts":"2024-01-01T00:00:00.000Z","area_type":"Suburb",""" +
+      """"geospatial_footprint":"POINT (0 0)"},{"Id":2,"ts":"2024-01-01T00:01:00.000Z","area_type":"Ward"}]""")
+    assert(docs("v1.2").contains(""""status":"Open""""))
+    assert(notified.toSeq.map(_.sorted) == Seq(Seq(1L, 2L)))
+  }
+
   test("Op-63 notify fires only for non-empty batches") {
     var notified: Seq[Long] = null
     ChangeStream.notifyIfAny(Seq(7L, 8L).toDF("Id"), "Id")(ids => notified = ids)

@@ -4,12 +4,19 @@
 # failure mode was "new spec committed, suite never re-run").
 #
 #   tools/preflight.sh            # sbt test + Verify/check at sf0.01
+#                                 # + the benchmark's self-check
 #   tools/preflight.sh --fast     # sbt test only
 #
-# Prints the test count and the oracle pass count; exits non-zero on any
-# failure so a snapshot commit behind it cannot ship red.
+# Fixtures are read from $GRAFT_TESTDATA (default ~/testdata); sbt runs
+# offline, with the same options as the tier-1 verify command in
+# ROADMAP.md. Prints the test count and the oracle pass count; exits
+# non-zero on any failure so a snapshot commit behind it cannot ship red.
 set -euo pipefail
 cd "$(dirname "$0")/.."
+
+export COURSIER_MODE=offline
+export SBT_OPTS="${SBT_OPTS:--Dsbt.override.build.repos=true -Dsbt.repository.config=$HOME/.sbt/repositories -Dsbt.offline=true -Xmx4g}"
+data="${GRAFT_TESTDATA:-$HOME/testdata}"
 
 out=$(mktemp -d)
 sbt -batch test 2>&1 | tee "$out/test.log" | grep -E "Tests:|All tests" || true
@@ -18,13 +25,17 @@ grep -q "All tests passed." "$out/test.log" || {
 tests=$(grep -oE "succeeded [0-9]+" "$out/test.log" | awk '{print $2}')
 
 if [[ "${1:-}" != "--fast" ]]; then
-  SPARK_GRAFT_CPUS=8 sbt -batch \
-    "runMain graft.Verify /root/testdata/sf0.01 $out/verify" \
+  sbt -batch "runMain graft.Verify $data/sf0.01 $out/verify" \
     > "$out/verify.log" 2>&1 || { tail -20 "$out/verify.log" >&2; exit 1; }
-  python3 tools/check_local.py /root/testdata/sf0.01 "$out/verify" \
+  python3 tools/check_local.py "$data/sf0.01" "$out/verify" \
     | tail -1 | tee "$out/check.txt"
   grep -q " 0 failed" "$out/check.txt" || {
     echo "PREFLIGHT FAIL: oracle compare has failures" >&2; exit 1; }
+  # the benchmark's own output checks (document row counts, emails, recon
+  # changes, result hashes) guard the serving layer end to end
+  python3 perfbench/selfcheck.py > "$out/selfcheck.log" 2>&1 || {
+    tail -20 "$out/selfcheck.log" >&2
+    echo "PREFLIGHT FAIL: perfbench/selfcheck.py" >&2; exit 1; }
 fi
 
 # CORRECTNESS_SF01.json must cover the FULL declared surface — the r16
